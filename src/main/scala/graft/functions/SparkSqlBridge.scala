@@ -33,6 +33,26 @@ object Bridge {
   def sessionUUID(s: org.apache.spark.sql.SparkSession): String =
     s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionUUID
 
+  /** The Spark schema of one parquet file, read from its footer on the
+    * calling thread and converted the way Spark's own schema inference
+    * converts it (`ParquetFileFormat.mergeSchemasInParallel`: the same
+    * footer read and converter, from the session's SQLConf) — without
+    * the Spark job that inference launches to read that one footer. */
+  def parquetFooterSchema(spark: org.apache.spark.sql.SparkSession,
+      path: String): org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet._
+    val state = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sessionState
+    val p = new org.apache.hadoop.fs.Path(path)
+    val input = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p,
+      state.newHadoopConf())
+    val footer = new org.apache.parquet.hadoop.Footer(p,
+      ParquetFooterReader.readFooter(input, org.apache.parquet.format
+        .converter.ParquetMetadataConverter.SKIP_ROW_GROUPS))
+    ParquetFileFormat.readSchemaFromFooter(footer,
+      new ParquetToSparkSchemaConverter(state.conf))
+  }
+
   /** Block until the shared LiveListenerBus has dispatched every queued
     * event (QueryExecutionListener and StreamingQueryListener both ride
     * it), or `timeoutMs` elapses. Replaces fixed-sleep races when

@@ -1,11 +1,12 @@
 package graft.runner
 
 import java.io.File
-import java.util.concurrent.{Executors, TimeUnit}
+import java.util.concurrent.{Executors, TimeUnit, TimeoutException}
 import java.util.concurrent.atomic.{AtomicLong, LongAdder}
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Layer-A harness parity (SURVEY.md §2a): the reference program's spine
   * rebuilt Spark-first.
@@ -25,8 +26,12 @@ import org.apache.spark.sql.SparkSession
   *    main.cc:338-363) — A15.
   *
   * Spark mapping: the pthread pool becomes a bounded driver-side executor
-  * issuing concurrent Spark *jobs* (one per file); Spark's scheduler runs
-  * each job's tasks. Read bytes come from task `InputMetrics` via a
+  * issuing concurrent Spark *jobs*, exactly one per file; Spark's
+  * scheduler runs each job's tasks. Each pool thread first reads its
+  * file's parquet footer on the driver (through the metered filesystem)
+  * and hands that schema to the reader, as DuckDB reads the footer inside
+  * the query — so Spark launches no schema-inference job, and the
+  * file's one job is the count. Read bytes come from task `InputMetrics` via a
   * SparkListener (the monitored-filesystem equivalent, main.cc:107-113,
   * without wrapping Hadoop's FileSystem). Row counting executes the full
   * `SELECT *` plan (`toRdd.count()` — column pruning deliberately NOT
@@ -76,56 +81,67 @@ object ScanRunner {
     spark.sparkContext.hadoopConfiguration
       .set(MonitoredFs.ImplKey, classOf[MonitoredFileSystem].getName)
     val listener = new InputMetricsListener
-    spark.sparkContext.addSparkListener(listener)
-    val before = DiskStats.snapshot(monDisks)
-    val (ops0, _) = MonitoredFs.snapshot()
-
-    val predicate = s"$filterCol > $threshold"
-    val totalRows = new AtomicLong
-    val failed = new AtomicLong
     val pool = Executors.newFixedThreadPool(math.max(jobs, 1))
-    val t0 = System.nanoTime()
-    files.foreach { f =>
-      // per-file scheduling line, reference format (main.cc:259)
-      println(s"Scheduling scan::$f[$predicate]...")
-      pool.execute { () =>
-        try {
-          // SELECT * FROM '<f>' WHERE <col> > θ — executed via toRdd so
-          // every column is materialized (no count-driven pruning),
-          // matching the reference's full-row fetch loop.
-          val df = spark.read.parquet(s"${MonitoredFs.Scheme}:$f")
-            .where(org.apache.spark.sql.functions.col(filterCol)
-              .cast("double") > threshold)
-          // A8 pretty-print sink (the reference's print_binary=0 path,
-          // main.cc:193-195) — debug mode, costs a second scan
-          if (printRows > 0) df.show(printRows, truncate = false)
-          val n = df.queryExecution.toRdd.count()
-          totalRows.addAndGet(n)
-        } catch {
-          // fail-soft per file (main.cc:269-271); NonFatal so an executor
-          // OOM/VM error still aborts the run instead of scoring as one
-          // more unreadable file
-          case scala.util.control.NonFatal(e) =>
-            System.err.println(s"error processing $f: ${e.getMessage}")
-            failed.incrementAndGet()
-        } finally {
-          println(s"scan::$f[$predicate] done!") // main.cc:275
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val before = DiskStats.snapshot(monDisks)
+      val (ops0, _) = MonitoredFs.snapshot()
+
+      val predicate = s"$filterCol > $threshold"
+      val totalRows = new AtomicLong
+      val failed = new AtomicLong
+      val t0 = System.nanoTime()
+      files.foreach { f =>
+        // per-file scheduling line, reference format (main.cc:259)
+        println(s"Scheduling scan::$f[$predicate]...")
+        pool.execute { () =>
+          try {
+            // SELECT * FROM '<f>' WHERE <col> > θ — executed via toRdd so
+            // every column is materialized (no count-driven pruning),
+            // matching the reference's full-row fetch loop. The schema
+            // comes from f's own footer, read here on the driver, so the
+            // count below is the file's only Spark job.
+            val path = s"${MonitoredFs.Scheme}:$f"
+            val df = spark.read.schema(Bridge.parquetFooterSchema(spark, path))
+              .parquet(path)
+              .where(org.apache.spark.sql.functions.col(filterCol)
+                .cast("double") > threshold)
+            // A8 pretty-print sink (the reference's print_binary=0 path,
+            // main.cc:193-195) — debug mode, costs a second scan
+            if (printRows > 0) df.show(printRows, truncate = false)
+            val n = df.queryExecution.toRdd.count()
+            totalRows.addAndGet(n)
+          } catch {
+            // fail-soft per file (main.cc:269-271); NonFatal so an executor
+            // OOM/VM error still aborts the run instead of scoring as one
+            // more unreadable file
+            case scala.util.control.NonFatal(e) =>
+              System.err.println(s"error processing $f: ${e.getMessage}")
+              failed.incrementAndGet()
+          } finally {
+            println(s"scan::$f[$predicate] done!") // main.cc:275
+          }
         }
       }
+      pool.shutdown()
+      // a run that outlives the wait must not report partial totals
+      if (!pool.awaitTermination(1, TimeUnit.HOURS))
+        throw new TimeoutException(
+          s"scan of ${files.size} files did not finish within 1 h")
+      val secs = (System.nanoTime() - t0) / 1e9
+
+      val after = DiskStats.snapshot(monDisks)
+      val deltas = before.keySet.intersect(after.keySet)
+        .map(d => d -> (after(d) - before(d))).toMap
+      val (ops1, _) = MonitoredFs.snapshot()
+
+      Report(predicate, jobs, secs, totalRows.get(), ops1 - ops0,
+        listener.bytesRead.sum(), listener.recordsRead.sum(),
+        files.size, failed.get().toInt, deltas)
+    } finally {
+      pool.shutdownNow()
+      spark.sparkContext.removeSparkListener(listener)
     }
-    pool.shutdown()
-    pool.awaitTermination(1, TimeUnit.HOURS)
-    val secs = (System.nanoTime() - t0) / 1e9
-
-    val after = DiskStats.snapshot(monDisks)
-    val deltas = before.keySet.intersect(after.keySet)
-      .map(d => d -> (after(d) - before(d))).toMap
-    spark.sparkContext.removeSparkListener(listener)
-    val (ops1, _) = MonitoredFs.snapshot()
-
-    Report(predicate, jobs, secs, totalRows.get(), ops1 - ops0,
-      listener.bytesRead.sum(), listener.recordsRead.sum(),
-      files.size, failed.get().toInt, deltas)
   }
 
   /** Arrow IPC stream sink (A7's stream-to-client semantics): run the

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.graftbridge.Bridge
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.runner.{DiskStats, ScanRunner}
@@ -29,6 +30,53 @@ class RunnerSpec extends AnyFunSuite {
     assert(r.readBytes > 0, "listener must observe input bytes")
     assert(r.seconds > 0)
     assert(r.predicate == "l_extendedprice > 30000.0")
+  }
+
+  test("footer schema equals Spark's inferred schema on every fixture file") {
+    val files = new java.io.File(sf).listFiles.filter(_.isFile)
+      .map(_.getPath).sorted
+    assert(files.length == 10)
+    files.foreach { f =>
+      assert(Bridge.parquetFooterSchema(spark, f) ==
+        spark.read.parquet(f).schema, s"schema drift on $f")
+    }
+  }
+
+  test("per-file fan-out runs exactly one Spark job per readable file") {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val counter = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    Bridge.waitListenerBus(spark, 30000)
+    spark.sparkContext.addSparkListener(counter)
+    val r = try ScanRunner.run(spark, Seq(sf), "l_extendedprice",
+      threshold = 30000.0, jobs = 8)
+    finally {
+      Bridge.waitListenerBus(spark, 30000)
+      spark.sparkContext.removeSparkListener(counter)
+    }
+    assert(r.files - r.failedFiles == 1)
+    assert(jobs.get == r.files - r.failedFiles,
+      s"${jobs.get} jobs for ${r.files - r.failedFiles} readable files")
+  }
+
+  test("per-file fan-out is fail-soft on a file that is not parquet") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_scan_bad")
+    try {
+      java.nio.file.Files.copy(
+        java.nio.file.Paths.get(s"$sf/lineitem.parquet"),
+        dir.resolve("lineitem.parquet"))
+      java.nio.file.Files.write(dir.resolve("notes.txt"),
+        "not a parquet file\n".getBytes("UTF-8"))
+      val r = ScanRunner.run(spark, Seq(dir.toString), "l_extendedprice",
+        threshold = 30000.0, jobs = 2)
+      assert(r.files == 2)
+      assert(r.failedFiles == 1)
+      assert(r.totalRows == ScanRunner.runMerged(spark,
+        Seq(s"$sf/lineitem.parquet"), "l_extendedprice", 30000.0))
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir.toFile)
   }
 
   test("arrow sink round-trips the filter scan") {
