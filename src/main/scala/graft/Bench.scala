@@ -14,41 +14,94 @@ import org.apache.spark.sql.SparkSession
   * masquerade as plan cost.
   */
 object Bench {
+
+  /** One query's record: `best` is the min of its 3 rep times, or -1 if
+    * any rep threw; `reps` holds each rep's time (-1 for a rep that
+    * threw); `error` is the first thrown `"<class>: <message>"`. */
+  private[graft] final case class QueryRun(name: String, best: Double,
+      reps: Seq[Double], error: Option[String])
+
+  /** Run each query three times, timing the complete execution. */
+  private[graft] def runQueries(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, graft.queries.QueryDefs.Q)],
+      observed: ObservedMetrics): Seq[QueryRun] = {
+    def once(fn: graft.queries.QueryDefs.Q): Either[String, Double] = {
+      val t0 = System.nanoTime()
+      // toRdd.count(), not Dataset.count(): wrapping the query in a count
+      // aggregate lets EliminateSorts drop the final ORDER BY, which would
+      // under-measure relative to what Verify actually executes.
+      try {
+        val df = fn(spark, sfDir)
+        df.queryExecution.toRdd.count()
+        val dt = (System.nanoTime() - t0) / 1e9
+        observed.harvestFrom(df)
+        Right(dt)
+      }
+      catch { case e: Throwable => Left(s"${e.getClass.getName}: ${e.getMessage}") }
+    }
+
+    // min-of-3: this host shows intermittent multi-second stalls
+    // unrelated to plan cost (identical queries measured 1.7s and 47s in
+    // different minutes); the min is the statistic that reflects the
+    // plan. ALL three rep times are also emitted ("reps") so an in-suite
+    // stall that eats every rep (q_projection_expr, round 6: min 3.86 s
+    // vs 0.78 s isolated) is self-diagnosing post-hoc.
+    queries.map { case (name, fn) =>
+      // Per-rep cleanup OUTSIDE the timed region, so every rep starts
+      // from rep 1's environment: (a) cached intermediates (shingles,
+      // token explodes) a query reuses across its own branches; (b) the
+      // memory-sink temp view each streaming rep leaves behind
+      // ("tumbling_<nanos>", …) whose rows pin driver memory and grow
+      // the catalog monotonically — with the terminated-query registry,
+      // the prime suspects for r7's monotone per-rep growth on
+      // q_stream_tumbling (reps 1.32/2.25/3.96 s); (c) that registry
+      // itself. Fixture views some SQL queries register (registerAll)
+      // are re-registered by any query that needs them, so dropping all
+      // temp views is safe.
+      def cleanup(): Unit = {
+        spark.catalog.clearCache()
+        spark.catalog.listTables().collect()
+          .filter(_.isTemporary)
+          .foreach(t => spark.catalog.dropTempView(t.name))
+        spark.streams.resetTerminated()
+      }
+      val runs = Seq.fill(3) { val t = once(fn); cleanup(); t }
+      val error = runs.collectFirst { case Left(e) => e }
+      val reps = runs.map(_.getOrElse(-1.0))
+      QueryRun(name, if (error.isDefined) -1.0 else reps.min, reps, error)
+    }
+  }
+
+  /** Headline total: the summed min times of the queries that ran. A
+    * failing query is not in it, so `n_failed` travels with it. */
+  private[graft] def totalSec(results: Seq[QueryRun]): Double =
+    results.map(_.best).filter(_ >= 0).sum
+
+  /** `{"<query>":"<class>: <message>", …}` for the queries that threw. */
+  private[graft] def errorsJson(results: Seq[QueryRun]): String =
+    results.flatMap(r => r.error.map(e =>
+      Verify.jsonString(r.name) + ":" + Verify.jsonString(e)))
+      .mkString("{", ",", "}")
+
+  /** The short stdout line: total, counts, and the 10 slowest queries. */
+  private[graft] def summaryLine(sfDir: String,
+      results: Seq[QueryRun]): String = {
+    val totalStr = f"${totalSec(results)}%.1f"
+    val top10 = results.sortBy(-_.best).take(10)
+      .map(r => "\"" + r.name + "\":" + f"${r.best}%.2f")
+      .mkString("{", ",", "}")
+    val nFailed = results.count(_.error.isDefined)
+    s"""{"metric":"total","value":$totalStr,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"n_failed":$nFailed,"queries":$top10,"full":"target/bench.json"}"""
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // optional args: restrict to the named queries (local dev loop)
     val only = args.toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // storage-partitioned DSv2 scans (SynthSource layout=mod) report
-      // KeyGroupedPartitioning; this flag lets Catalyst honor it
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/warehouse")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // oracle-replayed context: assert capped ≡ uncapped like Verify
-      // (default is off for production constructions — ADVICE r11)
-      .config("spark.graft.dedup.dfCapGuard", "on")
-      // r15 (r14 verdict "what's wrong" #1): the publish sink's proof
-      // receipts — a count job on the persisted batch frame, a driver
-      // dir listing, a plan walk and two bucket-size walks per upsert
-      // trigger — are TELEMETRY, not query computation; they stay ON
-      // (default) in Verify and the contract specs, where the proofs
-      // live, and OFF here so the bench measures the published table's
-      // cost, not its audit trail. Result rows are identical either
-      // way (the conf gates only the receipt recording).
-      .config("spark.graft.publish.receipts", "off")
-      .getOrCreate()
-    // ERROR, not WARN: the k-row presentation windows legitimately log
-    // WindowExec single-partition warnings (census-whitelisted), and
-    // hundreds of those lines surround the final JSON in the driver's
-    // stdout capture — the r9 verdict fingered them as a parse hazard.
-    spark.sparkContext.setLogLevel("ERROR")
-    // One ERROR source remains above that floor: the per-rep cleanup
-    // unpersists cached RDDs while a straggler task's completion event
+    val spark = Session.build(Session.Bench, Session.graftCpus)
+    // Session.Bench logs at ERROR (see there for why). One ERROR source
+    // remains above that floor: the per-rep cleanup unpersists cached
+    // RDDs while a straggler task's completion event
     // is still queued in the DAGScheduler event loop, and its
     // accumulators are already unregistered — the scheduler logs a full
     // "attempted to access non-existent accumulator" stack per event
@@ -143,58 +196,15 @@ object Bench {
     val observed = new ObservedMetrics
     spark.listenerManager.register(observed)
 
-    def once(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      // toRdd.count(), not Dataset.count(): wrapping the query in a count
-      // aggregate lets EliminateSorts drop the final ORDER BY, which would
-      // under-measure relative to what Verify actually executes.
-      try {
-        val df = fn(spark, sfDir)
-        df.queryExecution.toRdd.count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        observed.harvestFrom(df)
-        dt
-      }
-      catch { case _: Throwable => -1.0 }
-    }
-
-    // min-of-3: this host shows intermittent multi-second stalls
-    // unrelated to plan cost (identical queries measured 1.7s and 47s in
-    // different minutes); the min is the statistic that reflects the
-    // plan. ALL three rep times are also emitted ("reps") so an in-suite
-    // stall that eats every rep (q_projection_expr, round 6: min 3.86 s
-    // vs 0.78 s isolated) is self-diagnosing post-hoc.
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
+    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.isEmpty || only(name) }
-      .map { case (name, fn) =>
-      // Per-rep cleanup OUTSIDE the timed region, so every rep starts
-      // from rep 1's environment: (a) cached intermediates (shingles,
-      // token explodes) a query reuses across its own branches; (b) the
-      // memory-sink temp view each streaming rep leaves behind
-      // ("tumbling_<nanos>", …) whose rows pin driver memory and grow
-      // the catalog monotonically — with the terminated-query registry,
-      // the prime suspects for r7's monotone per-rep growth on
-      // q_stream_tumbling (reps 1.32/2.25/3.96 s); (c) that registry
-      // itself. Fixture views some SQL queries register (registerAll)
-      // are re-registered by any query that needs them, so dropping all
-      // temp views is safe.
-      def cleanup(): Unit = {
-        spark.catalog.clearCache()
-        spark.catalog.listTables().collect()
-          .filter(_.isTemporary)
-          .foreach(t => spark.catalog.dropTempView(t.name))
-        spark.streams.resetTerminated()
-      }
-      val runs = Seq.fill(3) { val t = once(fn); cleanup(); t }
-      val best = if (runs.exists(_ < 0)) -1.0 else runs.min
-      (name, best, runs)
-    }
-    val qs = results.map { case (k, v, _) => "\"" + k + "\":" + v }
+    val results = runQueries(spark, sfDir, queries, observed)
+    val qs = results.map(r => "\"" + r.name + "\":" + r.best)
       .mkString("{", ",", "}")
-    val repsJson = results.map { case (k, _, runs) =>
-      "\"" + k + "\":" + runs.map(r => f"$r%.3f").mkString("[", ",", "]") }
+    val repsJson = results.map { r =>
+      "\"" + r.name + "\":" + r.reps.map(t => f"$t%.3f").mkString("[", ",", "]") }
       .mkString("{", ",", "}")
-    val total = results.map(_._2).filter(_ >= 0).sum
+    val total = totalSec(results)
     // map the memory-sink name prefixes back to library query names
     // one definition, shared with the streaming plan census
     val sinkToQuery = graft.streaming.EventStreams.sinkToQuery
@@ -217,24 +227,21 @@ object Bench {
     // contention; unexpected misses ⇒ the shared table stopped carrying
     // its family and every consumer is re-mining.
     val memoJson = graft.MemoStats.json()
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$repsJson,"state":$state,"observed":$obsJson,"memo":$memoJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"reps":$repsJson,"state":$state,"observed":$obsJson,"memo":$memoJson,"errors":${errorsJson(results)},"sf":"$sfDir"}"""
     // The driver captures only the last ~2,000 chars of stdout, and the
     // sbt runner appends its own "[success] Total time: …" epilogue
     // AFTER this program's last print — r5-r8's ~1,900-char compact line
     // left no headroom, so it reached the driver truncated mid-JSON and
     // BENCH_r{5..8}.json all carry "parsed": null. The stdout artifact
     // is therefore a SHORT self-contained line (total + the 10 slowest
-    // queries, ≲ 700 chars — over 1,300 chars of epilogue headroom);
-    // the complete per-query map (all queries, 3-rep arrays, state,
-    // observed) lives exclusively in target/bench.json.
+    // queries and the failure count, ≲ 720 chars — over 1,200 chars of
+    // epilogue headroom); the complete per-query map (all queries, 3-rep
+    // arrays, state, observed, error texts) lives exclusively in
+    // target/bench.json.
     val out = java.nio.file.Paths.get("target/bench.json")
     java.nio.file.Files.createDirectories(out.getParent)
     java.nio.file.Files.write(out, (line + "\n").getBytes("UTF-8"))
-    val totalStr = f"$total%.1f"
-    val top10 = results.sortBy(-_._2).take(10)
-      .map { case (k, v, _) => "\"" + k + "\":" + f"$v%.2f" }
-      .mkString("{", ",", "}")
-    println(s"""{"metric":"total","value":$totalStr,"unit":"sec","sf":"$sfDir","n_queries":${results.size},"queries":$top10,"full":"target/bench.json"}""")
+    println(summaryLine(sfDir, results))
     spark.stop()
   }
 }

@@ -1,33 +1,27 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** JSON string literal. Escapes backslash, quote, and ALL control chars
+    * (<0x20): a tab or CR in builder-authored SQL (or in an error text)
+    * would otherwise make the reader's json.load fail — for
+    * oracle_sql.json, silently zeroing the round's correctness. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // Optional extra args: restrict to the named queries (local dev loop).
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Write int64 micros (not int96) so DuckDB/pyarrow read the exact
-      // same instants the oracle computes.
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .config("spark.sql.adaptive.enabled", "true")
-      // storage-partitioned DSv2 scans (SynthSource layout=mod) report
-      // KeyGroupedPartitioning; this flag lets Catalyst honor it
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/warehouse")
-      .config("spark.ui.enabled", "false")
-      // oracle-replayed context: assert capped ≡ uncapped (the DuckDB
-      // twins replay the shingle pair join with NO df cap) — default
-      // is off for production constructions (ADVICE r11)
-      .config("spark.graft.dedup.dfCapGuard", "on")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(Session.Verify, Session.graftCpus)
     new java.io.File(outDir).mkdirs()
     // capture observe() pipeline telemetry (checkpoint-time metrics
     // arrive via the async listener; final-plan metrics synchronously)
@@ -58,20 +52,9 @@ object Verify {
       // the 70-query dump doesn't accumulate executor storage memory
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${jsonString(k)}: ${jsonString(v)}" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

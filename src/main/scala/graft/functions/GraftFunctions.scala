@@ -1,20 +1,14 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 
 /** SQL-surface registration for the library's custom Catalyst
   * expressions, so `spark.sql("... cosine_sim(a, b) ...")` works exactly
-  * like a built-in.
-  *
-  * Two entry points, matching how Spark ships extensions:
-  *  - [[GraftFunctions.registerAll]] for an existing session (temp
-  *    function registry);
-  *  - [[GraftExtensions]] for `spark.sql.extensions=graft.functions.
-  *    GraftExtensions` (injected at session build, survives new
-  *    sessions).
+  * like a built-in. [[registerAll]] writes the session's temp function
+  * registry; a SQL-backed library query (q_sim_cosine_sql) calls it on
+  * the session it runs on, so any session, however it was built, gets
+  * the same functions.
   */
 object GraftFunctions {
 
@@ -65,54 +59,5 @@ object GraftFunctions {
     case Seq(c, Literal(n: Int, _)) => WordNgramsGenerator(c, n)
     case _ => throw new IllegalArgumentException(
       "word_ngrams(text, n-literal)")
-  }
-}
-
-/** `spark.sql.extensions`-injectable variant. */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier("cosine_sim"),
-      new ExpressionInfo(classOf[CosineSimilarity].getName, "cosine_sim"),
-      (args: Seq[Expression]) => CosineSimilarity(args(0), args(1))))
-    e.injectFunction((
-      FunctionIdentifier("rolling_fingerprint"),
-      new ExpressionInfo(classOf[RollingFingerprint].getName,
-        "rolling_fingerprint"),
-      (args: Seq[Expression]) => args match {
-        case Seq(c) => RollingFingerprint(c, 16)
-        case Seq(c, Literal(w: Int, _)) => RollingFingerprint(c, w)
-        case _ => throw new IllegalArgumentException(
-          "rolling_fingerprint(text[, window-literal])")
-      }))
-    e.injectFunction((
-      FunctionIdentifier("srp_band_keys"),
-      new ExpressionInfo(classOf[SrpBandKeys].getName, "srp_band_keys"),
-      (args: Seq[Expression]) => args match {
-        case Seq(v, Literal(bands: Int, _), Literal(bits: Int, _)) =>
-          SrpBandKeys(v, bands, bits)
-        case _ => throw new IllegalArgumentException(
-          "srp_band_keys(vec, bands-literal, bits-literal)")
-      }))
-    e.injectFunction((
-      FunctionIdentifier("decimal_dot"),
-      new ExpressionInfo(classOf[DecimalDotProduct].getName, "decimal_dot"),
-      (args: Seq[Expression]) => DecimalDotProduct(args(0), args(1))))
-    e.injectFunction((
-      FunctionIdentifier("decimal_sqdist"),
-      new ExpressionInfo(classOf[DecimalSqDist].getName, "decimal_sqdist"),
-      (args: Seq[Expression]) => DecimalSqDist(args(0), args(1))))
-    e.injectFunction((
-      FunctionIdentifier("word_ngrams"),
-      new ExpressionInfo(classOf[WordNgramsGenerator].getName, "word_ngrams"),
-      (args: Seq[Expression]) => args match {
-        case Seq(c, Literal(n: Int, _)) => WordNgramsGenerator(c, n)
-        case _ => throw new IllegalArgumentException(
-          "word_ngrams(text, n-literal)")
-      }))
-    e.injectFunction((
-      FunctionIdentifier("remove_tokens_at"),
-      new ExpressionInfo(classOf[RemoveTokensAt].getName, "remove_tokens_at"),
-      (args: Seq[Expression]) => RemoveTokensAt(args(0), args(1))))
   }
 }

@@ -62,9 +62,7 @@ object Similarity {
     * total — bounded, vs n² for any FIXED k as n grows (the r7 flag:
     * k hard-wired to 8 means 100 TB cells of ~10⁹ vectors each).
     * Exact integer sqrt (no floor(sqrt(double)) drift at perfect
-    * squares); the oracle replays it as MAX(b) WHERE b*b <= COUNT(*).
-    * Production override: `spark.graft.semantic.cells` (set it to
-    * n/targetCellSize when a specific cell population is wanted). */
+    * squares); the oracle replays it as MAX(b) WHERE b*b <= COUNT(*). */
   private[graft] def ivfCells(n: Long): Int = {
     var b = math.max(0L, math.sqrt(n.toDouble).toLong - 2)
     while ((b + 1) * (b + 1) <= n) b += 1
@@ -164,8 +162,7 @@ object Similarity {
   }
 
   /** Deterministic IVF clustering shared by q_sim_ann_ivf and
-    * q_dedup_semantic: k = [[ivfCells]](n) seed vectors (ids 3..2+k, or
-    * the `spark.graft.semantic.cells` conf override), two Lloyd rounds
+    * q_dedup_semantic: k = [[ivfCells]](n) seed vectors, two Lloyd rounds
     * with decimal-exact coordinate sums, cosine assignment (ties →
     * lowest centroid id). Returns (vec_id, v, nsq, cell), CACHED —
     * every caller consumes it from multiple branches, and the harness
@@ -238,8 +235,7 @@ object Similarity {
     import s.implicits._
     val e = embWithNorms(s, d)
     val n = e.count()
-    val k = s.conf.getOption("spark.graft.semantic.cells")
-      .map(_.toInt).getOrElse(ivfCells(n))
+    val k = ivfCells(n)
     // Seeds are STRIDE-SPREAD (every ⌊n/k⌋-th id), not consecutive:
     // consecutive ids sample one narrow slice of the corpus — on any
     // corpus with locality in its id order (duplicates land adjacent,
@@ -359,11 +355,10 @@ object Similarity {
     val (incKey, _, _, _) = incIndexCoords(s, d)
     val e = embWithNorms(s, d)
     val n = e.count()
-    // honor spark.graft.semantic.cells exactly like ivfAssigned does
-    // (ADVICE r14): same k ⇒ same full-build memo key ⇒ a session that
-    // already paid the q_sim_ann_retrain build reuses it here
-    val k = s.conf.getOption("spark.graft.semantic.cells")
-      .map(_.toInt).getOrElse(ivfCells(n))
+    // the same k as ivfAssigned (ADVICE r14): same k ⇒ same full-build
+    // memo key ⇒ a session that already paid the q_sim_ann_retrain
+    // build reuses it here
+    val k = ivfCells(n)
     val retrained = graft.MemoStats.memoized("ivf_centroids", centMemo,
       (org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s), d,
         s"full$k"))(lloyd(s, e, k, math.max(1L, n / k)))

@@ -182,13 +182,7 @@ object ScanRunner {
     val printRows = sys.env.getOrElse("Env_print_rows", "0").toInt
     val dirs = if (args.nonEmpty) args.toSeq else Seq("/root/testdata/sf0.001")
 
-    val spark = SparkSession.builder()
-      .master(s"local[$jobs]")
-      .appName("graft-scan-runner")
-      .config("spark.sql.shuffle.partitions", jobs)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build(graft.Session.Scan, jobs)
 
     val r = run(spark, dirs, colName, threshold, jobs, disks, printRows)
 

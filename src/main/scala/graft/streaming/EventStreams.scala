@@ -495,18 +495,16 @@ object EventStreams {
     case m => m
   }
 
-  /** The posting table as the probe join's build side. Under the
-    * `partitioned` layout the checkpoint already carries the `h`
-    * hash-partitioning, so a sort-merge join would add nothing but a
-    * per-trigger SORT of the whole index (SMJ sorts both sides every
-    * micro-batch — the index side's sort is corpus-sized re-work);
-    * the shuffled-hash hint builds the co-located posting partition
-    * into a hash map instead, the [[joinDocArrays]] bucketed-mode
-    * discipline applied to the posting side. `plain` keeps the r15
-    * join untouched for A/B probes. */
-  private def probeSide(s: SparkSession, statSide: DataFrame): DataFrame =
-    if (postingsLayout(s) == "partitioned") statSide.hint("shuffle_hash")
-    else statSide
+  /** The posting table as the probe join's build side. The checkpoint
+    * already carries the `h` hash-partitioning ([[clusterIndex]]), so a
+    * sort-merge join would add nothing but a per-trigger SORT of the
+    * whole index (SMJ sorts both sides every micro-batch — the index
+    * side's sort is corpus-sized re-work); the shuffled-hash hint
+    * builds the co-located posting partition into a hash map instead,
+    * the [[joinDocArrays]] bucketed-mode discipline applied to the
+    * posting side. */
+  private def probeSide(statSide: DataFrame): DataFrame =
+    statSide.hint("shuffle_hash")
 
   /** Join per-candidate rows to the stored doc-array table in the
     * RESOLVED mode. `idxArr` comes out of [[clusterIndex]] already
@@ -542,23 +540,6 @@ object EventStreams {
     s"(${fold40Sql(e, FoldA)} * 8388608 + ${fold40Sql(e, FoldB)} % 8388608)"
   }
 
-  /** Posting-table layout (`spark.graft.cluster.postings`) — r16: the
-    * probe join `arrivals ⋈ postings ON h` re-partitioned the WHOLE
-    * posting table on EVERY micro-batch trigger (the stored side is a
-    * plain localCheckpoint, so its RDD carries the idx_id partitioning
-    * of the label join, not the probe key), i.e. 4 triggers = 4 full
-    * index shuffles per invocation, per gate. `partitioned` (default)
-    * bakes the `h` hash-partitioning INTO the checkpoint — the
-    * [[docArrayMode]] `bucketed` trick applied to the posting table —
-    * so each trigger shuffles only its arrivals TO the index: shuffle
-    * ∝ batch, never ∝ index, which is also the only shape that
-    * survives 100 TB (a stored posting index is hash-bucketed on its
-    * probe key on disk; re-partitioning it per trigger is corpus-sized
-    * work per micro-batch). `plain` keeps the r15 shape for A/B
-    * probes. Rows are layout-independent (same join, same keys). */
-  private[graft] def postingsLayout(s: SparkSession): String =
-    s.conf.get("spark.graft.cluster.postings", "partitioned")
-
   /** Build (or memo-hit) the cluster gate's stored index pair — see
     * [[clusterPostingsMemo]]. Shared by q_stream_clusters and
     * q_stream_pipeline_v2 under ONE memo entry (same cut convention,
@@ -566,10 +547,9 @@ object EventStreams {
   private def clusterIndex(s: SparkSession, d: String, cut: Long,
       g: DataFrame, oldLabels: DataFrame, mode: String)
       : (DataFrame, DataFrame) = {
-    val layout = postingsLayout(s)
     graft.MemoStats.memoized("cluster_postings", clusterPostingsMemo,
         (org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s), d, cut,
-          mode + "/" + layout)) {
+          mode)) {
       val stored = g.where(col("doc_id") < cut)
         .select(col("doc_id").as("idx_id"),
           transform(col("sh"), x => fold63(x)).as("idx_h"))
@@ -581,12 +561,13 @@ object EventStreams {
       val joined = ex.join(rare, Seq("h"))
         .join(oldLabels.select(col("doc_id").as("idx_id"),
           col("lbl").as("idx_lbl")), Seq("idx_id"))
-      // `partitioned`: hash-partition on the probe key h inside the
-      // checkpoint (LogicalRDD keeps outputPartitioning) — see
-      // [[postingsLayout]]; triggers then shuffle arrivals only
-      val postings = (if (layout == "partitioned")
-        partitionedCheckpoint(s, joined, col("h"))
-      else joined.localCheckpoint())
+      // hash-partition on the probe key h inside the checkpoint
+      // (LogicalRDD keeps outputPartitioning): the probe join
+      // `arrivals ⋈ postings ON h` then shuffles only each trigger's
+      // arrivals TO the index, never the index per trigger — shuffle ∝
+      // batch, not ∝ index, the only shape that survives 100 TB (a
+      // stored posting index is hash-bucketed on its probe key on disk)
+      val postings = partitionedCheckpoint(s, joined, col("h"))
       // bucketed mode: bake the idx_id hash-partitioning INTO the
       // checkpoint (LogicalRDD keeps outputPartitioning), so triggers
       // shuffle candidates to the index, never the index to candidates
@@ -712,7 +693,7 @@ object EventStreams {
         transform(expr(Dedup.ShingleExpr), x => fold63(x)).as("sh_h"),
         explode_outer(col("pfx")).as("h"))
     val scored = joinDocArrays(
-        arrivals.join(probeSide(s, statSide), Seq("h"), "left"),
+        arrivals.join(probeSide(statSide), Seq("h"), "left"),
         idxArr, daMode)
       .withColumn("inter",
         size(array_intersect(col("sh_h"), col("idx_h"))).cast("double"))
@@ -815,15 +796,11 @@ object EventStreams {
     // batch frame × the keep-read's scan partitions yielded ~dozens of
     // near-empty parquet files PER TRIGGER, each paying open/footer/
     // commit-rename on write and listing/open on the NEXT trigger's
-    // keep-read (and on the published-table read). `on` (default)
-    // hash-clusters rows by the partition key before each write, so a
-    // trigger writes one file per touched bucket — a shuffle of the
-    // (tiny) emitted batch buys O(buckets) instead of
-    // O(tasks × buckets) files. `off` keeps the r15 shape for A/B.
-    val clusteredWrite =
-      s.conf.get("spark.graft.publish.clusteredWrite", "on") == "on"
-    def clustered(df: DataFrame): DataFrame =
-      if (clusteredWrite) df.repartition(col("pb")) else df
+    // keep-read (and on the published-table read). Hash-clustering rows
+    // by the partition key before each write makes a trigger write one
+    // file per touched bucket — a shuffle of the (tiny) emitted batch
+    // buys O(buckets) instead of O(tasks × buckets) files.
+    def clustered(df: DataFrame): DataFrame = df.repartition(col("pb"))
     // publish schema, derived WITHOUT running anything: `finish` is
     // pure column arithmetic, so applying it to an empty static frame
     // of the gate's schema yields the published shape
@@ -935,6 +912,11 @@ object EventStreams {
     else s.createDataFrame(
       new java.util.ArrayList[org.apache.spark.sql.Row](), pubSchema)
   }
+
+  /** Tokenizer-drift retrain operating point, per-mille OOV: a language
+    * whose delta byte-fallbacks ≥10% of its words fires the retrain
+    * (q_stream_tokenizer_drift under `spark.graft.bpe.autoRetrain`). */
+  private[graft] val RetrainOovPm = 100L
 
   val defs: Map[String, Q] = Map(
 
@@ -1467,7 +1449,7 @@ object EventStreams {
       // Changelog checkpointing: commit persists only the batch's delta
       // (the changelog) instead of a full RocksDB snapshot per batch —
       // snapshots still happen, but in the background and amortized
-      // over many batches. Measured here (TwsProbe, 8 state partitions,
+      // over many batches. Measured on this query (8 state partitions,
       // 4 batches): steady-state commit drops ~950 ms → ~370 ms per
       // batch (changelog fsync only); batch 0 still pays the one-time
       // base-snapshot upload (~2.2 s: file sync + zip), which dominates
@@ -2168,9 +2150,9 @@ object EventStreams {
           // TRIGGERED MAINTENANCE (the q_stream_ann_drift wiring
           // applied to the vocabulary loop; default off so the oracle
           // suite keeps its stale-tokenizer semantics): a per-language
-          // OOV rate at/above spark.graft.bpe.retrainOovPm per-mille
-          // (default 100 — a tokenizer byte-fallbacking ≥10% of words;
-          // the fixture's closed vocabulary sits at 0) — a k-language
+          // OOV rate at/above [[RetrainOovPm]] per-mille (a tokenizer
+          // byte-fallbacking ≥10% of words; the fixture's closed
+          // vocabulary sits at 0) — a k-language
           // driver scalar off the sink — executes the full-corpus BPE
           // retrain and REPLACES the session's stored tokenizer
           // (Bpe.swapRetrainedMerges), so the monitor's own next run
@@ -2183,7 +2165,7 @@ object EventStreams {
           val mode = s.conf.get("spark.graft.bpe.autoRetrain", "off")
           if (mode != "off"
               && sink.agg(max(col("oov_pm"))).head.getLong(0) >=
-                s.conf.get("spark.graft.bpe.retrainOovPm", "100").toLong) {
+                RetrainOovPm) {
             if (mode == "deferred") Bpe.recordPendingRetrain(s, d)
             else Bpe.swapRetrainedMerges(s, d)
           }
@@ -2491,7 +2473,7 @@ object EventStreams {
       val scored = joinDocArrays(probes
         .join(broadcast(evalG), Seq("gh1", "gh2"), "left")
         .join(dupG, Seq("gh1", "gh2"), "left")
-        .join(probeSide(s, statSide), Seq("h"), "left"), idxArr, daMode)
+        .join(probeSide(statSide), Seq("h"), "left"), idxArr, daMode)
         .withColumn("inter",
           size(array_intersect(col("sh_h"), col("idx_h"))).cast("double"))
         .withColumn("jac", col("inter") /

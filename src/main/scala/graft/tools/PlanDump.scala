@@ -1,33 +1,21 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-only: write the `explain("formatted")` output of named library
-  * queries to files (plans/<round>/<query>_<tag>.txt) — the judge-facing
-  * before/after plan artifacts for optimization rounds. Uses the same
-  * session shape as Bench (local[$SPARK_GRAFT_CPUS], shuffle.partitions =
-  * cpus, AQE on) so the captured initial plans match what the bench runs.
+  * queries to files (plans/<round>/<query>_<tag>.txt) — the before/after
+  * plan artifacts for optimization rounds. Builds Bench's session
+  * (`graft.Session.Bench` on $SPARK_GRAFT_CPUS cores) so the captured
+  * plans match what the bench runs.
   *
   * Usage: runMain graft.tools.PlanDump <outDir> <tag> <query...>
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val d = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Session.graftCpus
     val outDir = java.nio.file.Paths.get(args(0))
     val tag = args(1)
     val names = args.drop(2)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/warehouse")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.graft.dedup.dfCapGuard", "on")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.build(graft.Session.Bench, cpus)
     java.nio.file.Files.createDirectories(outDir)
     names.foreach { q =>
       val df = graft.SparkEntry.queries(q)(spark, d)

@@ -224,22 +224,10 @@ object ScaleProbe {
         "prefix", "blocklist", "novelty", "linkage", "stream", "codec",
         "kgrouped", "invidx", "substring", "unigram", "vocab", "ann_inc",
         "drift_recall", "despan_key", "stream_gates"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.Session.graftCpus
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outBase = s"${sys.props("java.io.tmpdir")}/graft_scale"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // amplified corpora deliberately push stop-shingles past the df
-      // cap (the fence under test); the oracle-equality guard is an
-      // oracle-context contract, not a probe one — see
-      // Dedup.assertDfCapInactive
-      .config("spark.graft.dedup.dfCapGuard", "off")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build(graft.Session.Scale, cpus)
     val agg = new StageAgg
     spark.sparkContext.addSparkListener(agg)
 
@@ -1556,11 +1544,10 @@ object ScaleProbe {
     // dataset while layout=mod (KeyGroupedPartitioning honored at the
     // scan) still moves ZERO bytes — the column being claimed.
     if (sections("kgrouped")) {
-      spark.conf.set("spark.sql.sources.v2.bucketing.enabled", "true")
       Seq(1000000L, 10000000L, 100000000L).foreach { rows =>
         def rollup(layout: String) = spark.read
           .format("graft.sources.GraftSynthSource")
-          .option("rows", rows.toString).option("parts", cpus)
+          .option("rows", rows.toString).option("parts", cpus.toString)
           .option("layout", layout).load()
           .groupBy(col("part"), (col("id") % 100000L).as("sub"))
           .agg(count(lit(1)).as("n"),

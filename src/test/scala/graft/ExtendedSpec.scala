@@ -162,17 +162,32 @@ class ExtendedSpec extends AnyFunSuite {
     assert(rows.forall { r => val c = r.getLong(2); c >= -1000001L && c <= 1000000L })
   }
 
-  test("extensions class injects functions at session level") {
-    val ext = new graft.functions.GraftExtensions
-    // apply against the current session's extension points via a child session
+  test("registerAll registers all 10 SQL functions on a fresh child session") {
     val s2 = spark.newSession()
     graft.functions.GraftFunctions.registerAll(s2)
-    import s2.implicits._
-    val v = s2.sql(
-      "SELECT cosine_sim(array(1.0F, 0.0F), array(1.0F, 0.0F)) AS c")
-      .head.getDouble(0)
-    assert(math.abs(v - 1.0) < 1e-12)
-    assert(ext != null)
+    // every registered name, called once from SQL: a registration that
+    // is silently dropped fails here with UNRESOLVED_ROUTINE
+    val r = s2.sql("""
+      SELECT cosine_sim(array(1.0F, 0.0F), array(1.0F, 0.0F)),
+             rolling_fingerprint('abcdefgh', 4),
+             srp_band_keys(array(1.0D, -2.0D, 0.5D), 4, 3),
+             decimal_dot(array(1.5D, 2.0D), array(2.0D, 0.25D)),
+             decimal_sqdist(array(1.0D, 2.0D), array(4.0D, 6.0D)),
+             remove_tokens_at(array('a', 'b', 'c'), array(1)),
+             jaro_winkler('martha', 'marhta'),
+             damerau_levenshtein('ab', 'ba'),
+             nfc_normalize('e\u0301')""").head
+    assert(math.abs(r.getDouble(0) - 1.0) < 1e-12)
+    assert(!r.isNullAt(1))
+    assert(r.getSeq[Long](2).size == 4)
+    assert(r.getDecimal(3).compareTo(new java.math.BigDecimal("3.5")) == 0)
+    assert(r.getDecimal(4).compareTo(new java.math.BigDecimal("25")) == 0)
+    assert(r.getString(5) == "a c")
+    assert(math.abs(r.getDouble(6) - 0.9611) < 1e-4)
+    assert(r.getLong(7) == 1L)
+    assert(r.getString(8) == "\u00e9")
+    val grams = s2.sql("SELECT word_ngrams('a b c', 2)").collect()
+    assert(grams.map(_.getString(1)).toSeq == Seq("a b", "b c"))
   }
 
   test("salted two-phase aggregation equals the plain groupBy") {

@@ -1052,8 +1052,13 @@ class PlanSpec extends AnyFunSuite {
   // 100 TB shape: the table is hash-partitioned by idx_id inside its
   // localCheckpoint and candidates shuffle TO it). Pin both halves of
   // the contract: identical rows, and the bucketed plan really does
-  // drop the array-table broadcast for a shuffled-hash join.
+  // drop the array-table broadcast for a shuffled-hash join. The posting
+  // index is stored hash-partitioned on its probe key h, so in either
+  // mode each trigger shuffled-hash joins it with no exchange on the
+  // stored side: only the arrivals move.
   test("cluster gate doc-array modes: same rows, bucketed drops the broadcast") {
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     import org.apache.spark.sql.execution.joins.{
       BroadcastHashJoinExec, ShuffledHashJoinExec}
     val key = "spark.graft.cluster.docarray"
@@ -1067,6 +1072,16 @@ class PlanSpec extends AnyFunSuite {
     assert(gatePlan("sclus").exists {
       case j: BroadcastHashJoinExec => hasIdxArr(j); case _ => false },
       "broadcast mode should broadcast the doc-array table")
+    def buildSide(j: ShuffledHashJoinExec) =
+      if (j.buildSide == BuildLeft) j.left else j.right
+    val postingJoins = gatePlan("sclus").collect {
+      case j: ShuffledHashJoinExec
+          if buildSide(j).output.exists(_.name == "idx_lbl") => j }
+    assert(postingJoins.nonEmpty,
+      "the gate should shuffled-hash join the stored postings")
+    assert(postingJoins.forall(j => !walkPlan(buildSide(j)).exists(
+      _.isInstanceOf[ShuffleExchangeLike])),
+      "the stored posting side must not be re-shuffled per trigger")
     val bV2 = run("q_stream_pipeline_v2")
     spark.conf.set(key, "bucketed")
     try {

@@ -5,24 +5,6 @@ import org.apache.spark.sql.SparkSession
 /** One shared local session for the whole test run (suite-level lazy vals
   * all resolve here, so we pay session bring-up once). */
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // storage-partitioned DSv2 scans (SynthSource layout=mod) report
-      // KeyGroupedPartitioning; this flag lets Catalyst honor it
-      .config("spark.sql.sources.v2.bucketing.enabled", "true")
-      .config("spark.sql.warehouse.dir", "/root/repo/target/warehouse")
-      .config("spark.ui.enabled", "false")
-      // oracle-replayed context (specs assert oracle twins): assert
-      // capped ≡ uncapped; default is off for production (ADVICE r11)
-      .config("spark.graft.dedup.dfCapGuard", "on")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Session.build(Session.Test, 8)
   val sf: String = "/root/testdata/sf0.001"
 }

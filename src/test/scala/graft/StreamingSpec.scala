@@ -175,7 +175,7 @@ class StreamingSpec extends AnyFunSuite {
   // Monitor → action for the VOCABULARY loop (the r14 ANN wiring
   // pattern applied to the tokenizer): on the planted new-vocab corpus
   // the delta's OOV rate (666‰) crosses the retrain operating point
-  // (spark.graft.bpe.retrainOovPm, default 100‰), so with
+  // (EventStreams.RetrainOovPm, 100‰), so with
   // autoRetrain=on the monitor must execute the full-corpus BPE
   // retrain and REPLACE the session's stored tokenizer — and its own
   // NEXT run must measurably recover: OOV → 0 (the new words are in
@@ -330,7 +330,24 @@ class StreamingSpec extends AnyFunSuite {
   test("publish sink holds its contract at 256 buckets") {
     def rows(q: String) = SparkEntry.queries(q)(spark, sf).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
+    // the NEWEST per-invocation run dir (since r15 each invocation
+    // publishes under its own run_<nanos> child — ADVICE r14: a fixed
+    // leaf raced concurrent JVMs), and the part-file count of each of
+    // its pb= bucket dirs. The write clusters rows by pb first, so each
+    // bucket holds one file, not one per writing task.
+    def newestRunBuckets(): Map[String, Int] = {
+      val parent = new java.io.File(s"${sys.props("java.io.tmpdir")}/" +
+        s"graft_pub_scpub_${sf.replaceAll("[^0-9a-zA-Z]", "_")}")
+      val outDir = parent.listFiles().filter(_.isDirectory)
+        .filter(_.getName.startsWith("run_")).maxBy(_.getName.drop(4).toLong)
+      outDir.listFiles().filter(d => d.isDirectory && d.getName.startsWith("pb="))
+        .map(d => d.getName -> d.listFiles().count(_.getName.startsWith("part-")))
+        .toMap
+    }
     val base = rows("q_stream_cluster_publish")
+    val baseBuckets = newestRunBuckets()
+    assert(baseBuckets.nonEmpty && baseBuckets.values.forall(_ == 1),
+      s"each bucket must hold exactly one part file: $baseBuckets")
     spark.conf.set("spark.graft.publish.buckets", "256")
     try {
       val fine = rows("q_stream_cluster_publish")
@@ -341,18 +358,14 @@ class StreamingSpec extends AnyFunSuite {
       assert(scans.nonEmpty &&
         scans.forall { case (t, ex, sc, _, _) => ex == sc && sc <= t },
         s"isin pruning must hold at 256 buckets: $scans")
-      // the layout really is finer: distinct pb dirs == distinct key %
-      // 256, read from the NEWEST per-invocation run dir (since r15 each
-      // invocation publishes under its own run_<nanos> child — ADVICE
-      // r14: a fixed leaf raced concurrent JVMs)
-      val parent = new java.io.File(s"${sys.props("java.io.tmpdir")}/" +
-        s"graft_pub_scpub_${sf.replaceAll("[^0-9a-zA-Z]", "_")}")
-      val outDir = parent.listFiles().filter(_.isDirectory)
-        .filter(_.getName.startsWith("run_")).maxBy(_.getName.drop(4).toLong)
-      val dirs = outDir.listFiles().filter(_.isDirectory)
-        .map(_.getName).filter(_.startsWith("pb=")).toSet
+      // the layout really is finer: distinct pb dirs == distinct key % 256
+      val buckets = newestRunBuckets()
       val want = base.map(_._1 % 256).toSet.map((v: Long) => s"pb=$v")
-      assert(dirs == want, s"on-disk buckets ${dirs.size} != ${want.size}")
+      assert(buckets.keySet == want,
+        s"on-disk buckets ${buckets.size} != ${want.size}")
+      assert(buckets.values.forall(_ == 1),
+        s"each bucket must hold exactly one part file: " +
+          buckets.filter(_._2 != 1))
     } finally spark.conf.unset("spark.graft.publish.buckets")
   }
 
