@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -146,12 +147,47 @@ class ExtendedSpec extends AnyFunSuite {
   test("approx_count_distinct is within rsd bounds of exact") {
     val exact = graft.sources.Tables.lineitem(spark, sf)
       .groupBy(col("l_returnflag"))
-      .agg(countDistinct(col("l_partkey")).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      .agg(countDistinct(col("l_partkey")), countDistinct(col("l_orderkey")))
+      .collect().map(r => r.getString(0) -> Seq(r.getLong(1), r.getLong(2)))
+      .toMap
     q("q_agg_approx").collect().foreach { r =>
-      val e = exact(r.getString(0))
-      assert(math.abs(r.getLong(1) - e).toDouble / e < 0.1,
-        s"approx ${r.getLong(1)} too far from exact $e")
+      exact(r.getString(0)).zipWithIndex.foreach { case (e, i) =>
+        val est = r.getLong(i + 1)
+        assert(math.abs(est - e).toDouble / e < 0.1,
+          s"${r.schema.fieldNames(i + 1)} $est too far from exact $e")
+      }
+    }
+  }
+
+  test("hllpp_count equals approx_count_distinct bit for bit, sort fallback included") {
+    import graft.functions.HllppAgg.hllpp_count
+    // sf0.01: 500 groups over 7 input partitions, so every partial
+    // aggregate holds more than the 128 keys that switch
+    // ObjectHashAggregate to its sort-based fallback
+    val sf01 = new java.io.File(sf).getParent + "/sf0.01"
+    val li = graft.sources.Tables.lineitem(spark, sf01)
+      .select((col("l_partkey") % 500).cast("long").as("g"), col("l_orderkey"),
+        col("l_shipdate").cast("string").as("ship_str"),
+        when(col("l_linenumber") % 3 =!= 0, col("l_suppkey")).as("some_null"),
+        lit(null).cast("long").as("all_null"))
+      .repartition(7)
+    val minKeys = li.groupBy(spark_partition_id()).agg(countDistinct(col("g")))
+      .collect().map(_.getLong(1)).min
+    assert(minKeys > 128, s"a partition holds only $minKeys keys")
+    val cols = Seq("l_orderkey", "ship_str", "some_null", "all_null")
+    for (rsd <- Seq(0.01, 0.05)) {
+      def estimates(f: (Column, Double) => Column) =
+        li.groupBy(col("g")).agg(f(col(cols.head), rsd),
+            cols.tail.map(c => f(col(c), rsd)): _*)
+          .collect().map(r => r.getLong(0) -> (1 to cols.size).map(r.getLong))
+          .toMap
+      val ours = estimates(hllpp_count)
+      val builtin = estimates(approx_count_distinct)
+      assert(ours.size == 500 && ours.keySet == builtin.keySet)
+      val bad = ours.keys.filter(k => ours(k) != builtin(k))
+      if (bad.nonEmpty) fail(s"rsd $rsd: ${bad.size} groups differ, e.g. " +
+        bad.take(3).map(k => s"$k: ${ours(k)} vs ${builtin(k)}").mkString("; "))
+      assert(ours.values.forall(_.last == 0L), "all-null column must estimate 0")
     }
   }
 

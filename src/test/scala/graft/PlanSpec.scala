@@ -85,6 +85,21 @@ class PlanSpec extends AnyFunSuite {
     assert(plan("q_agg_pricing_summary").contains("HashAggregate"))
   }
 
+  test("HLL++ sketches are one binary buffer: object-hash aggregates, no MS[] columns") {
+    import org.apache.spark.sql.execution.aggregate.{
+      BaseAggregateExec, ObjectHashAggregateExec}
+    // approx_count_distinct's 1,639 long buffer columns per sketch
+    // (MS[0..1638]) would push both aggregates onto HashAggregateExec
+    // without codegen; the compact sketch plans partial + final
+    // ObjectHashAggregateExec over one binary buffer each
+    val aggs = walkPlan(SparkEntry.queries("q_agg_approx")(spark, sfDir)
+      .queryExecution.executedPlan).collect { case a: BaseAggregateExec => a }
+    assert(aggs.size == 2 && aggs.forall(_.isInstanceOf[ObjectHashAggregateExec]),
+      aggs.map(_.nodeName).mkString(", "))
+    val wide = aggs.flatMap(_.output).map(_.name).filter(_.startsWith("MS["))
+    assert(wide.isEmpty, s"${wide.size} HLL++ register columns in the plan")
+  }
+
   test("partitioned source prunes to the matching partition at the scan") {
     val p = plan("q_source_partitioned")
     assert(p.contains("PartitionFilters") &&
