@@ -59,11 +59,6 @@ object Session {
   /** The shared spec session (built on `local[8]`). */
   val Test = Profile(Map(DfCapGuardOn), "WARN", Some("graft-tests"))
 
-  /** ScaleProbe: amplified corpora deliberately push stop-shingles past
-    * the df cap (the fence under test), so the oracle-equality guard
-    * is off. */
-  val Scale = Profile(Map("spark.graft.dedup.dfCapGuard" -> "off"), "WARN")
-
   /** ScanRunner.main, the reference's own per-file scan program. */
   val Scan = Profile(Map.empty, "WARN", Some("graft-scan-runner"))
 

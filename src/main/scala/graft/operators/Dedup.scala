@@ -126,9 +126,11 @@ object Dedup {
     // Verify, Bench, SparkTestSession — OPT IN via session conf
     // `spark.graft.dedup.dfCapGuard=on`, where capped ≡ uncapped must
     // be a checked precondition because the DuckDB twins replay the
-    // pair join uncapped. ScaleProbe stays off explicitly: its
-    // amplified corpora push stop-shingles past the cap by design
-    // (fam replica cliques hit df 70 at ×10).
+    // pair join uncapped. Every session graft.Session builds for a
+    // library query (Bench, Verify, Test) has the guard on, so a
+    // graft.sources.Amplify corpus whose stop-shingles pass the cap
+    // (its replica cliques reach max df 70 on sf0.1 ×10) fails here
+    // loudly instead of running the capped join.
     if (s.conf.get("spark.graft.dedup.dfCapGuard", "off") != "on") return
     val mx = graft.MemoStats.memoized("dfcap_guard", dfCapGuardMemo,
       (org.apache.spark.sql.graftbridge.Bridge.sessionUUID(s), tag)) {
@@ -430,15 +432,10 @@ object Dedup {
     * Convergence is detected by an (count, hash-sum) checksum of the
     * canonicalized edge set — one tiny aggregate per round, no
     * edge-set diff join. Labels fall out of the final star edges:
-    * child → its star center, center → itself.
-    *
-    * `onRound` observes (round, surviving edge count) after each
-    * alternation — the per-round checksum already carries the count, so
-    * exposing it is free. ScaleProbe uses it to measure the edge-list
-    * shrinkage that is the operator's whole at-scale argument. */
+    * child → its star center, center → itself. SCALE.md §2–§3 record
+    * its rounds and per-round edge-list size against pointer jumping. */
   private[graft] def connectedComponentsStars(docs: DataFrame,
-      edges: DataFrame, maxRounds: Int = 50,
-      onRound: (Int, Long) => Unit = (_, _) => ()): (DataFrame, Int) = {
+      edges: DataFrame, maxRounds: Int = 50): (DataFrame, Int) = {
     def canon(df: DataFrame): DataFrame =
       df.select(least(col("x"), col("y")).as("a"),
           greatest(col("x"), col("y")).as("b"))
@@ -483,7 +480,6 @@ object Dedup {
       sig = nsig
       e = ss
       rounds += 1
-      onRound(rounds, nsig._1)
     }
     val lbl = e.groupBy(col("b")).agg(min(col("a")).as("lbl"))
       .select(col("b").as("doc_id"), col("lbl"))

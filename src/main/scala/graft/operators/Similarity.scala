@@ -131,12 +131,12 @@ object Similarity {
 
   /** Retrain trigger for the ANN index-drift monitors, in the 1e9-
     * quantized PSI domain (1e7 ≡ PSI 0.01). A MEASURED operating
-    * point, not a convention: ScaleProbe's drift_recall probe (SCALE.md
-    * §24) found recall@5 over the incrementally-maintained index
-    * bottoms out (0.91) at PSI ≈ 0.014 — 18× below the textbook 0.25
-    * banding rule — and is NON-monotone in drift, so the trigger sits
-    * just under the measured knee. q_sim_ann_drift and
-    * q_stream_ann_drift ship this verdict as a `retrain` column. */
+    * point, not a convention: SCALE.md §24 records that recall@5 over
+    * the incrementally-maintained index bottoms out (0.91) at PSI ≈
+    * 0.014 — 18× below the textbook 0.25 banding rule — and is
+    * NON-monotone in drift, so the trigger sits just under the measured
+    * knee. q_sim_ann_drift and q_stream_ann_drift ship this verdict as
+    * a `retrain` column. */
   private[graft] val RetrainPsiNn = 10000000L
 
   /** Trained PQ codebooks per (session identity, dataset) — see the
@@ -793,9 +793,8 @@ object Similarity {
     // parameterized k-means replays coexisting under disjoint CTE
     // prefixes ([[ivfCtesPrefixed]]). What the action BUYS — recall@5
     // recovering at the drift points where the stale index bottoms
-    // out — is measured in ScaleProbe's drift_recall section, which
-    // executes this exact retrain+re-assign at every planted shift
-    // (SCALE.md §24/§28).
+    // out — is recorded in SCALE.md §24/§28, measured by running this
+    // exact retrain+re-assign at every planted shift.
     "q_sim_ann_retrain" -> ((s, d) => {
       val (stored, delta, _, _, _) = annIncrementalParts(s, d)
       val old = stored.unionAll(delta)

@@ -180,8 +180,8 @@ object UnigramLm {
     * (distinct types / weighted tokens), per-phase walls (seed stage vs
     * EM rounds — the two costs that scale differently with |vocab|),
     * and the largest per-round usage map (= the driver traffic bound,
-    * ≤ alphabet + SeedK rows by construction). The phase walls feed
-    * ScaleProbe's vocab-growth section (SCALE.md §22). */
+    * ≤ alphabet + SeedK rows by construction). SCALE.md §22 records the
+    * phase walls at a growing vocabulary. */
   private[graft] case class TrainStats(vocab: Seq[(String, Long)],
       skippedTypes: Long, skippedTokens: Long,
       seedWallS: Double, emWallS: Double, usageRowsMax: Long)

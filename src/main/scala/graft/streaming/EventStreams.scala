@@ -462,8 +462,8 @@ object EventStreams {
     * §28's measurement — ~420 B/doc TOTAL at ×100 on the fixture corpus
     * whose stored side averages ~52 folds/doc ⇒ ~416 B of array +
     * ~16 B fixed (key + array header — the same rows×16 + folds×8
-    * pricing ScaleProbe's stream_gates docarray_mb row uses). The
-    * array term now comes from the corpus itself. */
+    * pricing as §28's docarray row). The array term now comes from the
+    * corpus itself. */
   private[graft] val DocArrayBytesPerElem = 8L
   private[graft] val DocArrayRowOverheadBytes = 16L
 
@@ -610,11 +610,12 @@ object EventStreams {
     import org.apache.spark.sql.expressions.Window
     // spark.graft.cluster.zoneSlices (default 4): drop-zone file count
     // = trigger count (maxFilesPerTrigger=1). The gates are batching-
-    // invariant (the oracle proves it at any slicing); ScaleProbe
-    // raises this to put each trigger's keys in a SUBSET of the publish
-    // buckets — the pruning-WIN regime of the keyed-upsert sink (r14
-    // verdict missing #1), which the 4-slice fixture can't reach
-    // because every trigger touches every bucket.
+    // invariant (the oracle proves it at any slicing). StreamingSpec's
+    // narrow-trigger test raises it to 16 to put each trigger's keys in
+    // a SUBSET of the publish buckets — the pruning-WIN regime of the
+    // keyed-upsert sink, which the 4-slice default can't reach because
+    // every trigger touches every bucket — and pins the sink's subset
+    // pruning and byte receipts there.
     val slices = s.conf.get("spark.graft.cluster.zoneSlices", "4").toInt
     stagedZone(s, "sclus3", d, slices) {
       val exh = g.select(col("doc_id"),
@@ -731,7 +732,7 @@ object EventStreams {
     *    BEFORE, the trigger's net payload. Their ratio is the sink's
     *    write amplification, the number that sizes the bucket count
     *    against the trigger cadence at 100 TB (r14 verdict missing #1;
-    *    ScaleProbe's stream_gates legs sum both per run). */
+    *    StreamingSpec's narrow-trigger test pins both per upsert). */
   private[graft] val publishBatchRows = new scala.collection.concurrent
     .TrieMap[String, Vector[Long]]
   private[graft] val publishScanStats = new scala.collection.concurrent

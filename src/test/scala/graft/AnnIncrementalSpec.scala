@@ -121,7 +121,7 @@ class AnnIncrementalSpec extends AnyFunSuite {
   }
 
   // Monitor → action, WIRED (r13 verdict item 6): plant a drifted delta
-  // (the ScaleProbe drift_recall manifold — shifted mass concentrates
+  // (SCALE.md §24's drift manifold — shifted mass concentrates
   // in few cells), run the STREAMING drift monitor with
   // spark.graft.ann.autoRetrain=on, and assert the closed loop: the
   // verdict fires, the session's stored-index memo is swapped to the
